@@ -4,7 +4,7 @@ Each submodule exposes ``QUERIES: dict[str, Callable[[SparkSession, str],
 DataFrame]]`` and ``ORACLES: dict[str, str]`` (ANSI SQL for the DuckDB
 correctness oracle; keys without an oracle get a rows-only check).
 
-Oracle-parity rules used throughout (see tests/test_oracle_parity.py):
+Oracle-parity rules used throughout (checked by tools/verify_local.py):
 - every computed column is aliased identically in Spark and SQL
 - aggregated doubles are rounded (sum→2dp, ratios/means→4dp) on BOTH sides
   because distributed partial aggregation sums in a different order than

@@ -1,8 +1,8 @@
 """SparkSession factory tuned for the engine.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32 threads,
-single JVM).  The config below is written for cluster scale, not just the
-test box:
+Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default: the host's
+``os.cpu_count()``, single JVM).  The config below is written for cluster
+scale, not just the test box:
 
 - AQE on: runtime coalescing of shuffle partitions, skew-join splitting,
   and broadcast-join demotion/promotion based on observed sizes — this is
@@ -29,10 +29,11 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def _local_cores() -> int:
+    default = os.cpu_count() or 1
     try:
-        return max(1, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+        return max(1, int(os.environ.get("SPARK_GRAFT_CPUS", default)))
     except ValueError:
-        return 32
+        return default
 
 
 def get_spark(app_name: str = "mini-project-204721-spark") -> SparkSession:

@@ -40,6 +40,7 @@ import uuid
 from typing import Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from .manifest_io import manifest_io_for
 
@@ -2368,6 +2369,19 @@ def _carry_bloom(parent: dict | None, files: list[str]) -> list[dict]:
     return _carry_sidecar_entries(parent, files, "bloom")
 
 
+#: layout of a bloom sidecar: one row per (column, file, word) with the
+#: word's OR-ed bit mask.  The writer casts to it and the probe reads with
+#: it, so a probe builds its scan without a schema-inference job.
+_BLOOM_SIDECAR_SCHEMA = StructType(
+    [
+        StructField("col", StringType()),
+        StructField("file", StringType()),
+        StructField("word", LongType()),
+        StructField("bits", LongType()),
+    ]
+)
+
+
 def _build_bloom_entry(
     spark: SparkSession,
     table_dir: str,
@@ -2447,7 +2461,7 @@ def _build_bloom_entry(
     for p in parts[1:]:
         out = out.unionByName(p)
     out = out.join(F.broadcast(spell_df), "__raw").select(
-        "col", "file", "word", "bits"
+        *[F.col(f.name).cast(f.dataType) for f in _BLOOM_SIDECAR_SCHEMA.fields]
     )
     sidecar = str(
         fs.makeQualified(_child(jvm, table_dir, "_bloom", f"bf-{uuid.uuid4().hex}"))
@@ -2860,7 +2874,8 @@ def _bloom_prune_files(
             # candidate files regardless
             flt = flt & F.col("file").isin(cand)
         scans.append(
-            spark.read.parquet(e["sidecar"])
+            spark.read.schema(_BLOOM_SIDECAR_SCHEMA)
+            .parquet(e["sidecar"])
             .filter(flt)
             .select(F.lit(pi).alias("pi"), "file", "word", "bits")
         )
